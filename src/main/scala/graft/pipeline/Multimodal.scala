@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ConfBridge
 
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -144,8 +145,8 @@ object Multimodal {
     * when the builder + downstream decode dominate it — deep pixel/PDF/
     * WARC decodes yes, header-only walks no (their per-row work is at
     * scan speed, so the exchange is pure overhead; those call sites pass
-    * spread = false). The count is the deployment-sized
-    * spark.sql.shuffle.partitions, never a constant. */
+    * spread = false). The count is the session's resolved
+    * shuffle-partition count, never a constant. */
   def synthTable(docs: DataFrame, spread: Boolean = true)
                 (f: (Long, Array[Byte]) => (String, Array[Byte])): DataFrame = {
     val spark = docs.sparkSession
@@ -153,8 +154,7 @@ object Multimodal {
     val base = docs.select(col("doc_id"), col("text"))
     val part =
       if (!spread) base
-      else base.repartition(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
+      else base.repartition(ConfBridge.numShufflePartitions(spark), col("doc_id"))
     part.as[(Long, String)].mapPartitions { it =>
       it.map { case (id, text) =>
         val (ref, content) = f(id, text.getBytes(UTF_8))

@@ -5,6 +5,7 @@ import graft.engine.{RuleProgram, ShadowEngine}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ConfBridge
 import org.apache.spark.util.CollectionAccumulator
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -29,13 +30,15 @@ final case class LineageRow(
   *    per-row setup, no driver round-trips, no collect());
   *  - rows are embarrassingly parallel (all reference state is row-local,
   *    SURVEY.md §3.4) so no shuffle is needed for processing itself;
-  *    an OPTIONAL salted repartition spreads pathological mega-docs;
+  *    `repartitionByDoc` is an optional hash spread for skewed corpora;
   *  - lineage is gathered with a lightweight accumulator (one row per
   *    partition, not per doc) — no second pass over the data;
   *  - resumable writes bucket the output by xxhash64(doc_id)%N with one
   *    commit marker per bucket: a re-run recomputes only uncommitted
   *    buckets (sandbox stand-in for Iceberg snapshot commits; the writer
-  *    sits behind this object so a real catalog is a drop-in).
+  *    sits behind this object so a real catalog is a drop-in). The writer
+  *    shuffles its input by bucket first, so each task owns whole buckets
+  *    (one file per bucket) and the doc-id hash spreads mega-docs.
   */
 object ShadowSpark {
 
@@ -363,12 +366,15 @@ object ShadowSpark {
 
   private def markerDir(path: String) = Paths.get(path, "_graft_committed")
 
+  /** Buckets with a commit marker under `path`. Entries of the marker
+    * directory that are not `bucket-<int>` (a stray temp file, say) are
+    * ignored. */
   def committedBuckets(path: String): Set[Int] = {
     val dir = markerDir(path)
     if (!Files.isDirectory(dir)) Set.empty
     else Files.list(dir).iterator().asScala
       .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("bucket-") => s.stripPrefix("bucket-").toInt }
+      .flatMap(s => if (s.startsWith("bucket-")) s.stripPrefix("bucket-").toIntOption else None)
       .toSet
   }
 
@@ -377,6 +383,10 @@ object ShadowSpark {
     * are skipped (their input rows are filtered out BEFORE the engine runs,
     * so no recompute) and only missing buckets are (re)written via dynamic
     * partition overwrite. Returns the buckets written this run.
+    *
+    * Each bucket is written by one task, as one parquet file, so write
+    * parallelism is min(nBuckets, the session's shuffle partitions): size
+    * `nBuckets` at or above the cluster's core count.
     *
     * At real scale the input table would be Iceberg-partitioned by the same
     * bucket expression, so the resume filter prunes input partitions rather
@@ -389,7 +399,6 @@ object ShadowSpark {
       path: String,
       nBuckets: Int = 64): Seq[Int] = {
     val spark = docs.sparkSession
-    import spark.implicits._
     val done = committedBuckets(path)
     val todo = (0 until nBuckets).filterNot(done.contains)
     if (todo.isEmpty) return Seq.empty
@@ -398,34 +407,20 @@ object ShadowSpark {
       if (done.isEmpty) docs
       else docs.where(!bucketOf(nBuckets).isin(done.toSeq.map(Integer.valueOf): _*))
 
-    // columnar emission, under a TIE-BAND routing rule: columnar is the
-    // documented incumbent, and the route flips ONLY when the bench A/B
-    // (BENCH/BASELINE.md, >= 3 interleaved rounds per path, noop sink)
-    // shows a challenger leading the incumbent by MORE than 5% in a
-    // committed run. Rounds 3 and 4 measured columnar and raw within
-    // ~2-4% of each other with the sign flipping between runs — that is
-    // host noise, i.e. a tie, and a tie keeps the incumbent (chasing a
-    // sub-noise winner flip-flopped the route two rounds running).
-    // processColumnarRaw stays available for the zero-object-emission
-    // invariant if row width ever grows enough to beat the band. Output
-    // byte-equal across all three paths (SparkSpec pins raw == typed;
-    // columnar shares the typed emitter).
-    val out = processColumnar(remaining.toDF(), program).toDF()
+    // Bucket ownership: each task of the shuffle owns whole buckets
+    // (bucket % p), so the engine and the parquet write for a bucket run
+    // in one task and a call writes one file per bucket, not one per
+    // (input split x bucket). Hashing doc ids into buckets also spreads
+    // mega-docs evenly.
+    val p = math.min(nBuckets, ConfBridge.numShufflePartitions(spark))
+    val owned = remaining.toDF().repartitionById(p, pmod(bucketOf(nBuckets), lit(p)).cast("int"))
+    processColumnar(owned, program).toDF()
       .withColumn("bucket", bucketOf(nBuckets))
-
-    val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      out.write
-        .mode(SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(path)
-    } finally {
-      prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+      .write
+      .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket")
+      .parquet(path)
 
     // commit markers, one per bucket written this run
     Files.createDirectories(markerDir(path))

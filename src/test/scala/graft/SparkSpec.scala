@@ -147,6 +147,35 @@ class SparkSpec extends AnyFunSuite {
     assert(ShadowSpark.writeResumable(docs, program, crashPath, nBuckets).isEmpty)
   }
 
+  test("resumable writer: one data file per bucket from a multi-partition input") {
+    val docs = Corpus.generate(spark, 400, 4)
+    val nBuckets = 8
+    val path = tmpDir("graft_owned").toString
+    assert(ShadowSpark.writeResumable(docs, program, path, nBuckets).sorted == (0 until nBuckets))
+    (0 until nBuckets).foreach { b =>
+      val files = Files.list(java.nio.file.Paths.get(path, s"bucket=$b")).iterator().asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq
+      assert(files.size == 1, s"bucket $b holds ${files.mkString(", ")}")
+    }
+    val written = spark.read.parquet(path).drop("bucket")
+      .as[DocOut].collect().sortBy(_.doc_id).toSeq
+    val expected = ShadowSpark.process(docs, program).collect().sortBy(_.doc_id).toSeq
+    assert(written == expected)
+  }
+
+  test("resumable writer: stray marker entries are ignored on resume") {
+    val docs = Corpus.generate(spark, 100, 2)
+    val nBuckets = 4
+    val path = tmpDir("graft_stray").toString
+    ShadowSpark.writeResumable(docs, program, path, nBuckets)
+    val markers = java.nio.file.Paths.get(path, "_graft_committed")
+    Files.delete(markers.resolve("bucket-2"))
+    Files.write(markers.resolve("bucket-3.tmp"), Array[Byte]())
+    Files.write(markers.resolve("bucket-"), Array[Byte]())
+    assert(ShadowSpark.committedBuckets(path) == Set(0, 1, 3))
+    assert(ShadowSpark.writeResumable(docs, program, path, nBuckets) == Seq(2))
+  }
+
   // ---- training-pipeline operators ----
 
   def plantedDocs: org.apache.spark.sql.DataFrame = {
