@@ -1,6 +1,5 @@
 package graft
 
-import graft.core.Doc
 import graft.corpus.Corpus
 import graft.engine.RuleCompiler
 import graft.rules.RuleParser
@@ -174,53 +173,6 @@ object Bench {
     for (_ <- 1 to rounds; c <- sizes) walls(c) += wallAt(c, warm = true)
     val pairs4 = (0 until rounds).map(r => (walls(4)(r), walls(16)(r)))
     val pairs = (0 until rounds).map(r => (walls(8)(r), walls(32)(r)))
-
-    // ---- write-shaped output-path A/B (typed Encoder vs columnar decode
-    // vs zero-object raw UnsafeRow emission), interleaved in one warmed
-    // session, "noop" sink = full serialization without disk. The count-
-    // shaped scaling pairs stay on processColumnar because count prunes
-    // the output serializer entirely (raw's advantage is write-shaped —
-    // that is exactly what this A/B measures). ----
-    def abWall(kind: String, s: SparkSession): Double = {
-      import s.implicits._
-      val df = kind match {
-        case "typed" => ShadowSpark.process(s.read.parquet(corpusPath).as[Doc], program).toDF()
-        case "columnar" => ShadowSpark.processColumnar(s.read.parquet(corpusPath), program).toDF()
-        case _ => ShadowSpark.processColumnarRaw(s.read.parquet(corpusPath), program)
-      }
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // >= 3 interleaved rounds so the winner call is not one pair of walls
-    val abRounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_AB_ROUNDS", "3").toInt
-    val abKinds = Seq("typed", "columnar", "raw")
-    val abWalls: Map[String, ArrayBuffer[Double]] =
-      abKinds.map(_ -> new ArrayBuffer[Double]).toMap
-    if (abRounds > 0) {
-      val sAb = session(cpus)
-      try {
-        abKinds.foreach(k => abWall(k, sAb)) // warm
-        for (_ <- 1 to abRounds; k <- abKinds) abWalls(k) += abWall(k, sAb)
-      } finally sAb.stop()
-    }
-    val abDps: Map[String, Double] =
-      abKinds.map(k => k -> (if (abWalls(k).nonEmpty) nDocs / abWalls(k).min else 0.0)).toMap
-    val abWinner = if (abRounds > 0) abKinds.maxBy(abDps) else "n/a"
-    // Tie-band routing rule (writeResumable routes through the incumbent,
-    // processColumnar): the route flips ONLY when a challenger leads the
-    // incumbent by >5% in a committed run's >= 3 interleaved rounds.
-    // Rounds 3 and 4 each flipped the route on a <= 4% lead that reversed
-    // with host noise — a margin inside the noise band is a tie, and a
-    // tie keeps the incumbent.
-    val abIncumbent = "columnar"
-    val abMarginPct =
-      if (abRounds > 0 && abDps(abIncumbent) > 0)
-        (abDps(abWinner) / abDps(abIncumbent) - 1.0) * 100.0
-      else 0.0
-    val abRoute =
-      if (abRounds > 0 && abWinner != abIncumbent && abMarginPct > 5.0) abWinner
-      else abIncumbent
 
     // The literal north-rule form: the SAME job on a REAL multi-executor
     // topology, 1 vs 4 executor JVMs of 4 cores each (local-cluster),
@@ -397,7 +349,7 @@ object Bench {
         if (p.waitFor() == 0 && o.nonEmpty) o else "unknown"
       } catch { case _: Exception => "unknown" }
     println(
-      f"""{"metric":"docs_per_sec_local32","value":$dps32%.1f,"unit":"docs/sec","queries":$qs,"sf":"$sfDir","total_query_sec":$total%.2f,"bench_docs":$nDocs,"sha":"$gitSha","docs_per_sec_local8":$dps8%.1f,"docs_per_sec_local4":$dps4%.1f,"docs_per_sec_local16":$dps16%.1f,"docs_per_sec_1_executor":${j(dpsE1, execRan, "%.1f")},"docs_per_sec_4_executors":${j(dpsE4, execRan, "%.1f")},"wall_pairs_4_16":$pairs4Str,"wall_pairs_8_32":$pairsStr,"wall_pairs_exec_1_4":$pairsExecStr,"engine_wall_pairs_exec_1_4":$pairsExecEngStr,"scaling_efficiency_n4_to_16":$efficiency4%.3f,"scaling_efficiency_n4_to_16_median":$effMedian4%.3f,"scaling_efficiency_8_to_32":$efficiency%.3f,"scaling_efficiency_executors_1_to_4":${j(effExec, execRan)},"scaling_efficiency_exec_engine_ceiling":${j(effExecEng, execRan)},"job_to_exec_ceiling":${j(jobToCeilingExec, execRan)},"job_to_exec_ceiling_median":${j(jtcExecMedian, execRan)},"exec_pairs_discarded":${if (pairsExec.nonEmpty) execDiscarded.toString else "null"},"docs_per_sec_write_typed":${j(abDps("typed"), abRounds > 0, "%.1f")},"docs_per_sec_write_columnar":${j(abDps("columnar"), abRounds > 0, "%.1f")},"docs_per_sec_write_raw":${j(abDps("raw"), abRounds > 0, "%.1f")},"write_path_winner":"$abWinner","write_path_margin_pct":${j(abMarginPct, abRounds > 0, "%.1f")},"write_path_route":"$abRoute","job_to_engine_ceiling_4_16":$jobToCeiling4%.3f,"engine_docs_per_sec_8t":$eng8%.1f,"engine_docs_per_sec_32t":$eng32%.1f,"engine_scaling_efficiency_4_to_16":$engEff4%.3f,"engine_scaling_efficiency_8_to_32":$engEff%.3f,"host_cpu_eff_8_32":$hostCpuEff%.3f,"host_alloc_eff_8_32":$hostAllocEff%.3f}""")
+      f"""{"metric":"docs_per_sec_local32","value":$dps32%.1f,"unit":"docs/sec","queries":$qs,"sf":"$sfDir","total_query_sec":$total%.2f,"bench_docs":$nDocs,"sha":"$gitSha","docs_per_sec_local8":$dps8%.1f,"docs_per_sec_local4":$dps4%.1f,"docs_per_sec_local16":$dps16%.1f,"docs_per_sec_1_executor":${j(dpsE1, execRan, "%.1f")},"docs_per_sec_4_executors":${j(dpsE4, execRan, "%.1f")},"wall_pairs_4_16":$pairs4Str,"wall_pairs_8_32":$pairsStr,"wall_pairs_exec_1_4":$pairsExecStr,"engine_wall_pairs_exec_1_4":$pairsExecEngStr,"scaling_efficiency_n4_to_16":$efficiency4%.3f,"scaling_efficiency_n4_to_16_median":$effMedian4%.3f,"scaling_efficiency_8_to_32":$efficiency%.3f,"scaling_efficiency_executors_1_to_4":${j(effExec, execRan)},"scaling_efficiency_exec_engine_ceiling":${j(effExecEng, execRan)},"job_to_exec_ceiling":${j(jobToCeilingExec, execRan)},"job_to_exec_ceiling_median":${j(jtcExecMedian, execRan)},"exec_pairs_discarded":${if (pairsExec.nonEmpty) execDiscarded.toString else "null"},"job_to_engine_ceiling_4_16":$jobToCeiling4%.3f,"engine_docs_per_sec_8t":$eng8%.1f,"engine_docs_per_sec_32t":$eng32%.1f,"engine_scaling_efficiency_4_to_16":$engEff4%.3f,"engine_scaling_efficiency_8_to_32":$engEff%.3f,"host_cpu_eff_8_32":$hostCpuEff%.3f,"host_alloc_eff_8_32":$hostAllocEff%.3f}""")
 
     val md =
       f"""# BENCH / BASELINE — measured numbers
@@ -449,7 +401,6 @@ object Bench {
          || wall pairs (exec1 s, exec4 s) | $pairsExecStr |
          || engine-ceiling wall pairs (exec1 s, exec4 s) | $pairsExecEngStr |
          || throttle-artifact pairs discarded from exec stats (4N wall > N wall) | ${if (pairsExec.nonEmpty) execDiscarded.toString else "n/a"} |
-         || write-path A/B docs/sec (typed / columnar / raw, noop sink) | ${if (abRounds > 0) f"${abDps("typed")}%.1f / ${abDps("columnar")}%.1f / ${abDps("raw")}%.1f -> winner: $abWinner (margin $abMarginPct%.1f%% vs incumbent $abIncumbent -> route: $abRoute)" else "not run"} |
          || best wall local[8] / local[32] | $best8%.2f s / $best32%.2f s |
          || docs/sec local[8] / local[32] | $dps8%.1f / $dps32%.1f |
          || scaling efficiency 8 -> 32 (supplementary; see single-box ceilings below) | $efficiency%.3f |
@@ -508,7 +459,7 @@ object Bench {
     // number by up to ~2x between runs, so the md cites the best recorded
     // (measurement, same-run-ceiling) pair, not just this run's window
     val histLine =
-      f"""{"sha":"$gitSha","eff_4_16":$efficiency4%.3f,"eff_4_16_median":$effMedian4%.3f,"eff_8_32":$efficiency%.3f,"eff_exec_1_4":${j(effExec, execRan)},"eng_eff_exec_1_4":${j(effExecEng, execRan)},"jtc_exec":${j(jobToCeilingExec, execRan)},"jtc_exec_median":${j(jtcExecMedian, execRan)},"eng_eff_4_16":$engEff4%.3f,"eng_eff_8_32":$engEff%.3f,"job_to_ceiling_4_16":$jobToCeiling4%.3f,"dps_local32":$dps32%.1f,"dps_local16":$dps16%.1f,"dps_4_executors":${j(dpsE4, execRan, "%.1f")},"dps_write_raw":${j(abDps("raw"), abRounds > 0, "%.1f")},"dps_write_columnar":${j(abDps("columnar"), abRounds > 0, "%.1f")},"dps_write_typed":${j(abDps("typed"), abRounds > 0, "%.1f")},"write_route":"$abRoute","host_cpu_eff_8_32":$hostCpuEff%.3f,"host_alloc_eff_8_32":$hostAllocEff%.3f}"""
+      f"""{"sha":"$gitSha","eff_4_16":$efficiency4%.3f,"eff_4_16_median":$effMedian4%.3f,"eff_8_32":$efficiency%.3f,"eff_exec_1_4":${j(effExec, execRan)},"eng_eff_exec_1_4":${j(effExecEng, execRan)},"jtc_exec":${j(jobToCeilingExec, execRan)},"jtc_exec_median":${j(jtcExecMedian, execRan)},"eng_eff_4_16":$engEff4%.3f,"eng_eff_8_32":$engEff%.3f,"job_to_ceiling_4_16":$jobToCeiling4%.3f,"dps_local32":$dps32%.1f,"dps_local16":$dps16%.1f,"dps_4_executors":${j(dpsE4, execRan, "%.1f")},"host_cpu_eff_8_32":$hostCpuEff%.3f,"host_alloc_eff_8_32":$hostAllocEff%.3f}"""
     val histPath = Paths.get("BENCH/HISTORY.jsonl")
     Files.writeString(histPath, histLine + "\n",
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)

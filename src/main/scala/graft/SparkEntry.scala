@@ -1,8 +1,8 @@
 package graft
 
-import graft.core.{Doc, DocOut, Span, SpanKinds}
+import graft.core.SpanKinds
 import graft.corpus.Corpus
-import graft.engine.{EngineConfig, RuleCompiler, RuleProgram, ShadowEngine}
+import graft.engine.{EngineConfig, RuleCompiler, RuleProgram}
 import graft.pipeline.{Ann, Dedup, Multimodal, TextStats, WarcCodec, WebArchive}
 import graft.functions.WebFunctions
 import graft.rules.RuleParser
@@ -76,32 +76,35 @@ object SparkEntry {
     p.copy(compileErrors = errs.toVector ++ p.compileErrors)
   }
 
+  /** Canonical spans column of one document: `html` as one html span, or
+    * as `chunk`-char html spans when `chunk` > 0 (chunk-invariance path). */
+  private def htmlSpans(html: Column, chunk: Int = 0): Column = {
+    def span(text: Column, offset: Column): Column =
+      struct(lit(SpanKinds.Html).as("kind"), text.as("text"), lit("").as("media_ref"),
+        offset.as("offset"))
+    if (chunk <= 0) array(span(html, lit(0)))
+    else transform(sequence(lit(0), ((length(html) - 1) / chunk).cast("int")),
+      i => span(html.substr(i * chunk + 1, lit(chunk)), i))
+  }
+
+  /** The canonical (doc_id, spans) frame of per-doc HTML built from
+    * `documents` with `template`. */
+  private def htmlDocs(spark: SparkSession, dir: String, template: Seq[Part],
+                       chunk: Int = 0): DataFrame =
+    documents(spark, dir).select(col("doc_id").cast("string").as("doc_id"),
+      htmlSpans(tplCol(template), chunk).as("spans"))
+
   /** Run the engine over per-doc HTML built from `documents`; returns
-    * (doc_id, html, data_json, errs). `chunk` > 0 splits the html into
-    * fixed-size spans (chunk-invariance path). */
+    * (doc_id, html, data_json, errs), where html joins the output's html
+    * and data spans. */
   private def runEngine(spark: SparkSession, dir: String, template: Seq[Part],
                         rules: Seq[String], config: EngineConfig = EngineConfig(),
                         chunk: Int = 0): DataFrame = {
-    import spark.implicits._
-    val program = compile(rules, config)
-    val bc = spark.sparkContext.broadcast(program)
-    val input = documents(spark, dir)
-      .select(col("doc_id").cast("string").as("doc_id"), tplCol(template).as("h"))
-      .as[(String, String)]
-    val out = input.mapPartitions { it =>
-      val engine = new ShadowEngine(bc.value)
-      it.map { case (id, h) =>
-        val spans =
-          if (chunk <= 0) Seq(Span(SpanKinds.Html, h, "", 0))
-          else h.grouped(chunk).zipWithIndex.map { case (c, i) => Span(SpanKinds.Html, c, "", i) }.toSeq
-        val r = engine.process(Doc(id, spans))
-        (r.doc_id,
-         r.spans.filter(s => s.kind == SpanKinds.Html || s.kind == SpanKinds.Data).map(_.text).mkString,
-         r.data_json,
-         r.errors.mkString("|"))
-      }
-    }.toDF("doc_id", "html", "data_json", "errs")
-    out.orderBy("doc_id")
+    val htmlAndData = filter(col("spans"), _("kind").isin(SpanKinds.Html, SpanKinds.Data))
+    ShadowSpark.processColumnar(htmlDocs(spark, dir, template, chunk), compile(rules, config))
+      .select(col("doc_id"), array_join(transform(htmlAndData, _("text")), "").as("html"),
+        col("data_json"), array_join(col("errors"), "|").as("errs"))
+      .orderBy("doc_id")
   }
 
   private def oracleFor(expectedHtml: Seq[Part], expectedJson: Seq[Part],
@@ -201,17 +204,8 @@ object SparkEntry {
         .select(col("doc_id"), col("html").as("json_out"))),
     "s9_spans_to_rows" -> ((s, dir) => {
       // engine output spans -> rows via the built-in explode Generator
-      import s.implicits._
-      val program = compile(Seq(rulesHead, rulesMain))
-      val bc = s.sparkContext.broadcast(program)
-      val input = documents(s, dir)
-        .select(col("doc_id").cast("string").as("doc_id"), tplCol(tplMain).as("h"))
-        .as[(String, String)]
-      val outs = input.mapPartitions { it =>
-        val engine = new ShadowEngine(bc.value)
-        it.map { case (id, h) => engine.process(Doc(id, Seq(Span(SpanKinds.Html, h, "", 0)))) }
-      }
-      outs.select(col("doc_id"), explode(col("spans")).as("sp"))
+      ShadowSpark.processColumnar(htmlDocs(s, dir, tplMain), compile(Seq(rulesHead, rulesMain)))
+        .select(col("doc_id"), explode(col("spans")).as("sp"))
         .groupBy("doc_id")
         .agg(count(when(col("sp.kind") === "html", 1)).as("n_html"),
           count(when(col("sp.kind") === "data", 1)).as("n_data"),
@@ -376,24 +370,15 @@ object SparkEntry {
           """{ "s": "h1 + p", "hide": true }"""))
         .select(col("doc_id"), col("data_json"), col("errs"))),
     "p7_transform_strings" -> ((s, dir) => {
-      import s.implicits._
       val errs = new ArrayBuffer[String]
       val rule = RuleParser.parseStr(
         """{ "s": "#t", "edit": { "content": { "op": "upsert", "val": "VAL_TOKEN" } }, "append": ["<i>TOKEN</i>"] }""",
         errs).transformStrings(_.replace("TOKEN", "SWAPPED"))
       val program = RuleCompiler.compile(Seq(rule))
-      val bc = s.sparkContext.broadcast(program)
-      val input = documents(s, dir)
-        .select(col("doc_id").cast("string").as("doc_id"),
-          tplCol(Seq(L("<div id=\"t\">"), fText, L("</div>"))).as("h"))
-        .as[(String, String)]
-      input.mapPartitions { it =>
-        val e = new ShadowEngine(bc.value)
-        it.map { case (id, h) =>
-          val r = e.process(Doc(id, Seq(Span(SpanKinds.Html, h, "", 0))))
-          (id, r.spans.map(_.text).mkString)
-        }
-      }.toDF("doc_id", "html").orderBy("doc_id")
+      ShadowSpark.processColumnar(
+        htmlDocs(s, dir, Seq(L("<div id=\"t\">"), fText, L("</div>"))), program)
+        .select(col("doc_id"), array_join(transform(col("spans"), _("text")), "").as("html"))
+        .orderBy("doc_id")
     }),
 
     // ---- SQL surface: shadow_extract for spark.sql users (SURVEY §4.3) ----
@@ -654,23 +639,16 @@ object SparkEntry {
     // mix. Pins that engine output composes with the relational layer and
     // that extraction is byte-faithful through the JSON round-trip.
     "pipe3_extract_quality_dedup" -> ((s, dir) => {
-      import s.implicits._
       val program = compile(Seq(
         """{ "s": "p.art", "data": { "path": "d", "values": { "t": {"source": "Contents"} } } }"""))
-      val bc = s.sparkContext.broadcast(program)
-      val input = documents(s, dir).select(col("doc_id"), col("lang"),
-        tplCol(Seq(L("<div class=\"nav\"><a href=\"/\">home</a></div><p class=\"art\">"),
-          fText, L("</p>"))).as("h"))
-        .as[(Long, String, String)]
-      val extracted = input.mapPartitions { it =>
-        val e = new ShadowEngine(bc.value)
-        it.map { case (id, lang, h) =>
-          val r = e.process(Doc(id.toString, Seq(Span(SpanKinds.Html, h, "", 0))))
-          (id, lang, r.data_json)
-        }
-      }.toDF("doc_id", "lang", "data_json")
-      val withText = extracted.select(col("doc_id"), col("lang"),
-        get_json_object(col("data_json"), "$.d.t").as("text"))
+      val extracted = ShadowSpark.processColumnar(htmlDocs(s, dir,
+        Seq(L("<div class=\"nav\"><a href=\"/\">home</a></div><p class=\"art\">"), fText, L("</p>"))),
+        program)
+        .select(col("doc_id").cast("long").as("doc_id"),
+          get_json_object(col("data_json"), "$.d.t").as("text"))
+      // the engine's rows carry no lang: join it back by doc_id
+      val withText = extracted.join(documents(s, dir).select(col("doc_id"), col("lang")), "doc_id")
+        .select(col("doc_id"), col("lang"), col("text"))
       Dedup.exactSurvivors(withText)
         .where(size(split(col("text"), " ")) >= 20)
         .groupBy(col("lang"))
@@ -686,26 +664,16 @@ object SparkEntry {
     // engine fidelity, JSON round-trip, posexplode, native resolution
     // expressions — every link individually oracled.
     "pipe4_extract_outlinks" -> ((s, dir) => {
-      import s.implicits._
       val program = compile(Seq(
         """{ "s": "a", "data": { "path": "links.", "values": { "h": {"source": "Attribute", "name": "href"} } } }"""))
-      val bc = s.sparkContext.broadcast(program)
-      val input = documents(s, dir).select(col("doc_id")).as[Long].map { id =>
-        val a = (id % 7).toInt
-        val base = s"HTTPS://WWW.Site$a.Example.COM/dir$a/sub/page.html"
-        val html = s"""<html><body><a href="/root$a.css">x</a><p>n</p>""" +
-          s"""<a href="img$a.png">y</a><a href="https://Other.ORG/abs$a">z</a></body></html>"""
-        (id, base, html)
-      }
-      val extracted = input.mapPartitions { it =>
-        val e = new ShadowEngine(bc.value)
-        it.map { case (id, base, h) =>
-          (id, base,
-            e.process(Doc(id.toString, Seq(Span(SpanKinds.Html, h, "", 0)))).data_json)
-        }
-      }.toDF("doc_id", "base", "data_json")
-      extracted
-        .select(col("doc_id"), col("base"),
+      val a = (col("doc_id").cast("long") % 7).cast("string")
+      val html = concat(lit("<html><body><a href=\"/root"), a, lit(".css\">x</a><p>n</p><a href=\"img"), a,
+        lit(".png\">y</a><a href=\"https://Other.ORG/abs"), a, lit("\">z</a></body></html>"))
+      val docs = documents(s, dir).select(col("doc_id").cast("string").as("doc_id"),
+        htmlSpans(html).as("spans"))
+      ShadowSpark.processColumnar(docs, program)
+        .select(col("doc_id").cast("long").as("doc_id"),
+          concat(lit("HTTPS://WWW.Site"), a, lit(".Example.COM/dir"), a, lit("/sub/page.html")).as("base"),
           from_json(col("data_json"), "links ARRAY<STRUCT<h: STRING>>",
             Map.empty[String, String]).as("d"))
         .select(col("doc_id"), col("base"), posexplode(col("d.links.h")))

@@ -112,8 +112,9 @@ object RuleCompiler {
 
 /** Reusable per-task output-span accumulator (parallel arrays, offset ==
   * index): the engine's output side allocates NO Span/DocOut/Seq objects
-  * when consumed through `processStreamAcc` — the raw row-emission path
-  * (ShadowSpark.processColumnarRaw) writes UnsafeRows straight from it.
+  * when consumed through `processStreamAcc` — the `ShadowExtract` plan
+  * node writes UnsafeRows straight from it, and the `shadow_extract`
+  * expression builds its html from it.
   * Contents are valid until the next process call on the same engine. */
 final class SpanAcc {
   var n = 0
@@ -180,39 +181,38 @@ final class ShadowEngine(program: RuleProgram) extends Serializable {
 
   def process(doc: Doc): DocOut = {
     // ---- assemble the byte stream + media markers ----
+    // Null policy of the Spark decoder (graft.spark.SpanStreamDecoder): a
+    // null span or kind contributes nothing (a null span sorts first), a
+    // media span's null ref/text is "", a null text adds no stream chars.
+    def offsetOf(sp: Span): Int = if (sp == null) Int.MinValue else sp.offset
     val ordered = doc.spans match {
       case sp: scala.collection.IndexedSeq[Span] =>
         // skip the sort allocation when spans are already in offset order
         var sorted = true; var i = 1
-        while (i < sp.length && sorted) { if (sp(i).offset < sp(i - 1).offset) sorted = false; i += 1 }
-        if (sorted) sp else sp.sortBy(_.offset)
-      case sp => sp.sortBy(_.offset)
+        while (i < sp.length && sorted) { if (offsetOf(sp(i)) < offsetOf(sp(i - 1))) sorted = false; i += 1 }
+        if (sorted) sp else sp.sortBy(offsetOf)
+      case sp => sp.sortBy(offsetOf)
     }
     val sb = new java.lang.StringBuilder
     val markers = new ArrayBuffer[HtmlParser.MediaMarker]
+    def orEmpty(s: String): String = if (s == null) "" else s
     ordered.foreach { sp =>
-      if (sp.kind == SpanKinds.Media)
-        markers += HtmlParser.MediaMarker(sb.length, sp.media_ref, sp.text)
-      else sb.append(sp.text)
+      if (sp != null && sp.kind != null) {
+        if (sp.kind == SpanKinds.Media)
+          markers += HtmlParser.MediaMarker(sb.length, orEmpty(sp.media_ref), orEmpty(sp.text))
+        else if (sp.text != null) sb.append(sp.text)
+      }
     }
-    processStream(doc.doc_id, sb.toString, markers)
+    val acc = processStreamAcc(sb.toString, markers)
+    DocOut(doc.doc_id, acc.toSpans, acc.dataJson, acc.errors.toSeq)
   }
 
   @transient private lazy val scratchAcc = new SpanAcc
 
-  /** Stream-level entry: the document's concatenated non-media text plus
-    * media markers at char positions (lets callers that already hold the
-    * raw columns skip Span/Doc materialization entirely). */
-  def processStream(docId: String, stream: String,
-                    markers: scala.collection.Seq[HtmlParser.MediaMarker]): DocOut = {
-    val acc = processStreamAcc(stream, markers)
-    DocOut(docId, acc.toSpans, acc.dataJson, acc.errors.toSeq)
-  }
-
   /** Zero-object output path: fills the per-task SpanAcc (parallel string
-    * arrays) instead of allocating Span/DocOut/Seq per row — the raw
-    * row-emission path consumes it directly. The returned accumulator is
-    * reused by the next call on this engine. */
+    * arrays) instead of allocating Span/DocOut/Seq per row — the
+    * `ShadowExtract` plan node consumes it directly. The returned
+    * accumulator is reused by the next call on this engine. */
   def processStreamAcc(stream: String,
                        markers: scala.collection.Seq[HtmlParser.MediaMarker]): SpanAcc = {
     val acc = scratchAcc

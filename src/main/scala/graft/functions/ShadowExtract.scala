@@ -1,8 +1,9 @@
 package graft.functions
 
-import graft.core.{Doc, Span, SpanKinds}
-import graft.engine.{RuleCompiler, ShadowEngine}
+import graft.core.SpanKinds
+import graft.engine.RuleCompiler
 import graft.rules.RuleParser
+import graft.spark.ExtractStep
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -17,14 +18,15 @@ import scala.collection.mutable.ArrayBuffer
   * `shadow_extract(spans, rules_json)` over the canonical
   * `array<struct<kind,text,media_ref,offset>>` column, returning
   * `struct<html, data_json, errors>`. The rules argument must be foldable
-  * (a literal): the program is compiled once per task, exactly like the
-  * broadcast program on the `mapPartitions` path — reference analog:
+  * (a literal): the program is compiled once per task — reference analog:
   * ShadowApiInit::init compiles once, then streams documents
-  * (shadow_api.rs:70-98).
+  * (shadow_api.rs:70-98). Each row runs the same decode-and-engine step
+  * (`ExtractStep`) as the `ShadowExtract` plan node, so a null span or
+  * field follows the decoder's null policy instead of failing the job.
   *
+  * A per-row expression cannot be that plan node; it is the SQL surface.
   * Not codegen'd (CodegenFallback): the engine call dominates by orders of
-  * magnitude, so the per-row boxing of a generated wrapper is noise; the
-  * high-throughput path remains ShadowSpark.processColumnar.
+  * magnitude, so the per-row boxing of a generated wrapper is noise.
   */
 case class ShadowExtractExpr(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
@@ -44,31 +46,26 @@ case class ShadowExtractExpr(left: Expression, right: Expression)
     }
   }
 
-  @transient private lazy val engine: ShadowEngine = {
+  @transient private lazy val step: ExtractStep = {
     val errs = new ArrayBuffer[String]
     val rules = right.eval(null).asInstanceOf[UTF8String].toString
     val p = RuleCompiler.compile(Seq(RuleParser.parseStr(rules, errs)))
-    new ShadowEngine(p.copy(compileErrors = errs.toVector ++ p.compileErrors))
+    new ExtractStep(p.copy(compileErrors = errs.toVector ++ p.compileErrors))
   }
 
   override def nullSafeEval(spansVal: Any, rulesVal: Any): Any = {
-    val arr = spansVal.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val spans = new ArrayBuffer[Span](n)
+    val acc = step(spansVal.asInstanceOf[ArrayData])
+    val html = new java.lang.StringBuilder
     var i = 0
-    while (i < n) {
-      val st = arr.getStruct(i, 4)
-      spans += Span(st.getUTF8String(0).toString, st.getUTF8String(1).toString,
-        st.getUTF8String(2).toString, st.getInt(3))
+    while (i < acc.n) {
+      val kind = acc.kinds(i)
+      if (kind == SpanKinds.Html || kind == SpanKinds.Data) html.append(acc.texts(i))
       i += 1
     }
-    val out = engine.process(Doc("", spans.toSeq))
-    val html = new java.lang.StringBuilder
-    out.spans.foreach(s => if (s.kind == SpanKinds.Html || s.kind == SpanKinds.Data) html.append(s.text))
     InternalRow(
       UTF8String.fromString(html.toString),
-      UTF8String.fromString(out.data_json),
-      new GenericArrayData(out.errors.map(UTF8String.fromString).toArray[Any]))
+      UTF8String.fromString(acc.dataJson),
+      new GenericArrayData(acc.errors.map(UTF8String.fromString).toArray[Any]))
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): ShadowExtractExpr =

@@ -1,11 +1,10 @@
 package graft.spark
 
 import graft.core.{Doc, DocOut}
-import graft.engine.{RuleProgram, ShadowEngine}
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import graft.engine.RuleProgram
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ConfBridge
+import org.apache.spark.sql.graftbridge.{ConfBridge, ShadowExtract}
 import org.apache.spark.util.CollectionAccumulator
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -25,9 +24,11 @@ final case class LineageRow(
 /** Spark wiring for the extraction engine (SURVEY.md §3.5).
   *
   * Design for 100 TB / 1000 executors:
-  *  - the compiled RuleProgram is broadcast once; each task builds ONE
-  *    engine instance and streams rows through `mapPartitions` (no
-  *    per-row setup, no driver round-trips, no collect());
+  *  - every entry point runs the engine as one planner-visible operator,
+  *    the `ShadowExtract` plan node (graftbridge): the compiled
+  *    RuleProgram is broadcast once, each task builds ONE engine instance
+  *    and streams InternalRows through it (no per-row setup, no driver
+  *    round-trips, no collect());
   *  - rows are embarrassingly parallel (all reference state is row-local,
   *    SURVEY.md §3.4) so no shuffle is needed for processing itself;
   *    `repartitionByDoc` is an optional hash spread for skewed corpora;
@@ -43,315 +44,22 @@ final case class LineageRow(
 object ShadowSpark {
 
   /** Pure engine application; preserves the input partitioning. */
-  def process(docs: Dataset[Doc], program: RuleProgram): Dataset[DocOut] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(program)
-    docs.mapPartitions { it =>
-      val engine = new ShadowEngine(bc.value)
-      it.map(engine.process)
-    }
-  }
+  def process(docs: Dataset[Doc], program: RuleProgram): Dataset[DocOut] =
+    processColumnar(docs.toDF(), program)
 
-  /** Per-task decoder for the canonical
-    * (doc_id string, spans array<struct<kind,text,media_ref,offset>>) rows:
-    * assembles the document stream as raw UTF-8 bytes (decoded to String
-    * ONCE) and collects media markers, via a raw UnsafeArrayData read path
-    * with a generic-accessor fallback.
-    *
-    * Raw-layout fast path rationale: the generic accessors allocate a
-    * wrapper per struct element and per string field (~4 per span, ~120
-    * per doc) — at 350k docs/s that wrapper churn alone is >1 GB/s of
-    * garbage and is what keeps the decode half from scaling on many-core
-    * executors. Layout read directly:
-    *   [numElements:8][null bits: ceil(n/64)*8][n x 8B (off<<32|sz)]
-    * struct element -> UnsafeRow bytes at arrayBase+off:
-    *   [null bits: 8][4 x 8B slots]; string slots hold off<<32|sz
-    *   relative to the STRUCT start; int slot holds the value.
-    *
-    * Safety: any set null bit (array element or struct field) drops the
-    * row to the generic accessors, which surface the null explicitly
-    * instead of reading bytes at offset 0; and each task's first
-    * fast-decoded row is cross-checked byte-for-byte against the generic
-    * decode, pinning the generic path if Spark's internal layout ever
-    * drifts. */
-  private[spark] final class SpanStreamDecoder {
-    private var buf = new Array[Byte](16384) // per-task reusable byte scratch
-    private var chkBuf = new Array[Byte](0) // self-check scratch (first fast row only)
-    val markers = new scala.collection.mutable.ArrayBuffer[graft.html.HtmlParser.MediaMarker](8)
-    private val chkMarkers = new scala.collection.mutable.ArrayBuffer[graft.html.HtmlParser.MediaMarker](8)
-    private val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    private val kindMedia = org.apache.spark.unsafe.types.UTF8String.fromString(graft.core.SpanKinds.Media)
-    private var fastOk = true
-    private var fastChecked = false
-
-    // generic accessor decode (allocates ~4 wrappers per span). Null policy
-    // (one bad row must not kill the job, same stance as the engine's
-    // Throwable row guard): a null span element or null kind contributes
-    // nothing; a media span with null ref/text gets empty strings; a text
-    // span with null text contributes no stream bytes.
-    private def decodeGeneric(arr: org.apache.spark.sql.catalyst.util.ArrayData, n: Int,
-                              buf0: Array[Byte],
-                              mk: scala.collection.mutable.ArrayBuffer[graft.html.HtmlParser.MediaMarker])
-        : (Array[Byte], Int) = {
-      var b = buf0
-      var bytePos = 0
-      var i = 0
-      while (i < n) {
-        if (!arr.isNullAt(i)) {
-          val st = arr.getStruct(i, 4)
-          val kind = if (st.isNullAt(0)) null else st.getUTF8String(0)
-          if (kind == kindMedia) {
-            mk += graft.html.HtmlParser.MediaMarker(
-              bytePos,
-              if (st.isNullAt(2)) "" else st.getUTF8String(2).toString,
-              if (st.isNullAt(1)) "" else st.getUTF8String(1).toString)
-          } else if (kind != null && !st.isNullAt(1)) {
-            val u = st.getUTF8String(1)
-            val nb = u.numBytes()
-            if (bytePos + nb > b.length)
-              b = java.util.Arrays.copyOf(b, math.max(b.length * 2, bytePos + nb))
-            u.writeTo(java.nio.ByteBuffer.wrap(b, bytePos, nb))
-            bytePos += nb
-          }
-        }
-        i += 1
-      }
-      (b, bytePos)
-    }
-
-    // returns -1 length when any null bit is set (the generic path then
-    // decides what a null span/field means instead of reading garbage)
-    private def decodeFast(ua: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData, n: Int,
-                           base: Array[Byte], buf0: Array[Byte],
-                           mk: scala.collection.mutable.ArrayBuffer[graft.html.HtmlParser.MediaMarker])
-        : (Array[Byte], Int) = {
-      var b = buf0
-      var bytePos = 0
-      val a0 = ua.getBaseOffset
-      val nullWords = (n + 63) / 64
-      var w = 0
-      while (w < nullWords) {
-        if (org.apache.spark.unsafe.Platform.getLong(base, a0 + 8 + w * 8L) != 0L)
-          return (b, -1) // null element present
-        w += 1
-      }
-      val elems = a0 + 8 + (nullWords.toLong * 8)
-      val B = org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
-      var i = 0
-      while (i < n) {
-        val os = org.apache.spark.unsafe.Platform.getLong(base, elems + i * 8L)
-        val st = a0 + (os >>> 32) // struct base (absolute)
-        if (org.apache.spark.unsafe.Platform.getLong(base, st) != 0L)
-          return (b, -1) // null struct field present
-        def fieldOff(f: Int): Long =
-          org.apache.spark.unsafe.Platform.getLong(base, st + 8 + f * 8L)
-        val kOs = fieldOff(0)
-        val kLen = kOs.toInt
-        val kIdx = (st + (kOs >>> 32) - B).toInt
-        val isMedia = kLen == 5 && base(kIdx) == 'm' && base(kIdx + 1) == 'e' &&
-          base(kIdx + 2) == 'd' && base(kIdx + 3) == 'i' && base(kIdx + 4) == 'a'
-        val tOs = fieldOff(1)
-        val tLen = tOs.toInt
-        val tIdx = (st + (tOs >>> 32) - B).toInt
-        if (isMedia) {
-          val rOs = fieldOff(2)
-          mk += graft.html.HtmlParser.MediaMarker(bytePos,
-            new String(base, (st + (rOs >>> 32) - B).toInt, rOs.toInt, utf8),
-            new String(base, tIdx, tLen, utf8))
-        } else {
-          if (bytePos + tLen > b.length)
-            b = java.util.Arrays.copyOf(b, math.max(b.length * 2, bytePos + tLen))
-          System.arraycopy(base, tIdx, b, bytePos, tLen)
-          bytePos += tLen
-        }
-        i += 1
-      }
-      (b, bytePos)
-    }
-
-    /** Decodes the spans column of `row` (ordinal 1); the document stream
-      * is returned, media markers (char positions) are in `markers`. */
-    def decode(row: org.apache.spark.sql.catalyst.InternalRow): String = {
-      val arr = row.getArray(1)
-      val n = arr.numElements()
-      markers.clear()
-      var bytePos = -1
-      arr match {
-        case ua: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-            if fastOk && ua.getBaseObject.isInstanceOf[Array[Byte]] =>
-          val base = ua.getBaseObject.asInstanceOf[Array[Byte]]
-          val r = decodeFast(ua, n, base, buf, markers)
-          buf = r._1; bytePos = r._2
-          if (bytePos >= 0 && !fastChecked) {
-            fastChecked = true
-            chkMarkers.clear()
-            val g = decodeGeneric(arr, n, chkBuf, chkMarkers)
-            chkBuf = g._1
-            val same = g._2 == bytePos &&
-              java.util.Arrays.equals(buf, 0, bytePos, chkBuf, 0, g._2) &&
-              chkMarkers == markers
-            if (!same) { // layout drift: pin the generic path for the task
-              fastOk = false
-              bytePos = -1
-            }
-          }
-        case _ =>
-      }
-      if (bytePos < 0) { // generic path (non-unsafe input, nulls, or drift)
-        markers.clear()
-        val g = decodeGeneric(arr, n, buf, markers)
-        buf = g._1; bytePos = g._2
-      }
-      if (markers.nonEmpty) {
-        // byte offset -> UTF-16 char offset: count non-continuation bytes,
-        // +1 extra for 4-byte sequences (surrogate pairs)
-        var ci = 0; var bi = 0; var mi = 0
-        while (mi < markers.length) {
-          val target = markers(mi).pos
-          while (bi < target) {
-            val b = buf(bi)
-            if ((b & 0xC0) != 0x80) { ci += 1; if ((b & 0xF8) == 0xF0) ci += 1 }
-            bi += 1
-          }
-          markers(mi) = markers(mi).copy(pos = ci)
-          mi += 1
-        }
-      }
-      new String(buf, 0, bytePos, utf8)
-    }
-  }
-
-  /** Fast-path engine application over a DataFrame with the canonical
+  /** Engine application over a DataFrame with the canonical
     * (doc_id string, spans array<struct<kind,text,media_ref,offset>>)
-    * schema: rows are consumed as InternalRows via SpanStreamDecoder
-    * (UTF8String decode only, no generic Encoder deserializer, no
-    * intermediate Seq materialization) — measurably better task-level
-    * scaling since decode allocation is the non-scaling part of the
-    * pipeline on many-core executors. */
-  def processColumnar(df: org.apache.spark.sql.DataFrame, program: RuleProgram): Dataset[DocOut] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(program)
-    val rdd = df.select(col("doc_id"), col("spans")).queryExecution.toRdd.mapPartitions { it =>
-      val engine = new ShadowEngine(bc.value)
-      val dec = new SpanStreamDecoder
-      it.map { row =>
-        val docId = row.getUTF8String(0).toString
-        val stream = dec.decode(row)
-        engine.processStream(docId, stream, dec.markers)
-      }
-    }
-    spark.createDataset(rdd)
-  }
-
-  /** DocOut schema as the product encoder derives it (so `.as[DocOut]`
-    * lines up with the hand-written rows below). */
-  private lazy val docOutSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.Encoders.product[DocOut].schema
-
-  /** Zero-object end-to-end path: input rows are decoded in place
-    * (SpanStreamDecoder), the engine fills its reusable SpanAcc, and the
-    * output row is written straight into a reused UnsafeRowWriter — no
-    * Span/DocOut objects, no Encoder SerializeFromObject pass. This is the
-    * write-shaped job path (engine output feeding a parquet/Iceberg sink
-    * or further SQL), where the Encoder's per-span mapobjects loop is real
-    * per-row work; count-shaped jobs prune the serializer anyway. */
-  def processColumnarRaw(df: org.apache.spark.sql.DataFrame, program: RuleProgram)
-      : org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-    val bc = spark.sparkContext.broadcast(program)
-    val schema = docOutSchema
-    val rdd = df.select(col("doc_id"), col("spans")).queryExecution.toRdd
-      .mapPartitions { it =>
-        val engine = new ShadowEngine(bc.value)
-        val dec = new SpanStreamDecoder
-        import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
-        import org.apache.spark.unsafe.types.UTF8String
-        val rowWriter = new UnsafeRowWriter(4)
-        val spansWriter = new UnsafeArrayWriter(rowWriter, 8)
-        val spanStructWriter = new UnsafeRowWriter(spansWriter, 4)
-        val errsWriter = new UnsafeArrayWriter(rowWriter, 8)
-        // kind strings are a tiny closed set ("html"/"media"/"data"/...);
-        // media_refs are unique per doc, so those are NOT memoized
-        val kindU = new java.util.HashMap[String, UTF8String](8)
-        def u8(s: String): UTF8String = UTF8String.fromString(s)
-        def kindOf(s: String): UTF8String = {
-          var v = kindU.get(s)
-          if (v == null) { v = u8(s); kindU.put(s, v) }
-          v
-        }
-        it.map { row =>
-          val docIdU = row.getUTF8String(0)
-          val stream = dec.decode(row)
-          val acc = engine.processStreamAcc(stream, dec.markers)
-          rowWriter.reset()
-          rowWriter.zeroOutNullBytes()
-          rowWriter.write(0, docIdU)
-          // spans: array<struct<kind,text,media_ref,offset>>
-          val spansCursor = rowWriter.cursor()
-          spansWriter.initialize(acc.n)
-          var i = 0
-          while (i < acc.n) {
-            val structCursor = spansWriter.cursor()
-            spanStructWriter.resetRowWriter()
-            spanStructWriter.write(0, kindOf(acc.kinds(i)))
-            spanStructWriter.write(1, u8(acc.texts(i)))
-            spanStructWriter.write(2, u8(acc.refs(i)))
-            spanStructWriter.write(3, i)
-            spansWriter.setOffsetAndSizeFromPreviousCursor(i, structCursor)
-            i += 1
-          }
-          rowWriter.setOffsetAndSizeFromPreviousCursor(1, spansCursor)
-          rowWriter.write(2, u8(acc.dataJson))
-          val errsCursor = rowWriter.cursor()
-          errsWriter.initialize(acc.errors.length)
-          var e = 0
-          while (e < acc.errors.length) {
-            errsWriter.write(e, u8(acc.errors(e)))
-            e += 1
-          }
-          rowWriter.setOffsetAndSizeFromPreviousCursor(3, errsCursor)
-          rowWriter.getRow: org.apache.spark.sql.catalyst.InternalRow
-        }
-      }
-    org.apache.spark.sql.graftbridge.DataFrameBridge.fromInternalRows(spark, rdd, schema)
-  }
+    * columns, as the `ShadowExtract` plan node: rows are read as
+    * InternalRows and written as UnsafeRows, with no Encoder pass. */
+  def processColumnar(df: DataFrame, program: RuleProgram): Dataset[DocOut] =
+    ShadowExtract.rows(df, program).as(Encoders.product[DocOut])
 
   /** Engine application + per-partition lineage (accumulated driver-side;
     * one small row per task). Call `lineage.value` after an action. */
   def processWithLineage(docs: Dataset[Doc], program: RuleProgram)
       : (Dataset[DocOut], CollectionAccumulator[LineageRow]) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(program)
-    val acc = spark.sparkContext.collectionAccumulator[LineageRow]("graft_lineage")
-    val out = docs.mapPartitions { it =>
-      val engine = new ShadowEngine(bc.value)
-      val t0 = System.nanoTime()
-      var lo: String = null
-      var hi: String = null
-      var n = 0L
-      var checksum = 0L
-      // emit exactly one lineage row per task at completion: a completion
-      // listener (not a drained-iterator probe) so a downstream `limit`
-      // that stops consuming early still records what WAS processed
-      val tc = TaskContext.get()
-      if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
-        acc.add(LineageRow(tc.partitionId(), Option(lo).getOrElse(""), Option(hi).getOrElse(""),
-          n, checksum, (System.nanoTime() - t0) / 1000000L))
-      }
-      it.map { doc =>
-        val r = engine.process(doc)
-        if (lo == null || doc.doc_id < lo) lo = doc.doc_id
-        if (hi == null || doc.doc_id > hi) hi = doc.doc_id
-        n += 1
-        checksum ^= java.lang.Long.rotateLeft(
-          r.data_json.hashCode.toLong * 0x9e3779b97f4a7c15L + r.spans.length, (n % 63).toInt)
-        r
-      }
-    }
-    (out, acc)
+    val acc = docs.sparkSession.sparkContext.collectionAccumulator[LineageRow]("graft_lineage")
+    (ShadowExtract.rows(docs.toDF(), program, Some(acc)).as(Encoders.product[DocOut]), acc)
   }
 
   /** Salted explicit repartition for skewed corpora: hash(doc_id) spreads

@@ -252,6 +252,19 @@ class EngineEdgeSpec extends AnyFunSuite {
       assert(out.errors.exists(_.contains("internal error")))
   }
 
+  test("null span text adds nothing to the stream (the Spark decoder's null policy)") {
+    val program = RuleCompiler.compile(Seq(RuleParser.parseStr(
+      """{ "s": "p", "data": { "path": "d", "values": { "t": {"source": "Contents"} } } }""",
+      new ArrayBuffer[String])), EngineConfig(dataFormatter = _ => ""))
+    val out = new ShadowEngine(program).process(Doc("t", Seq(
+      Span(SpanKinds.Html, null, "", 0), null, Span(null, "<i>", "", 1),
+      Span(SpanKinds.Media, null, null, 2), Span(SpanKinds.Html, "<p>x</p>", "", 3))))
+    assert(out.spans.filter(_.kind != SpanKinds.Media).map(_.text).mkString == "<p>x</p>")
+    assert(out.spans.filter(_.kind == SpanKinds.Media).map(s => (s.text, s.media_ref)) == Seq(("", "")))
+    assert(out.data_json == """{"d":{"t":"x"}}""")
+    assert(out.errors.isEmpty)
+  }
+
   test("E9: post-hoc transform over collected data values (shadow_data.rs:251-269)") {
     val r = DNode.newObject(0, null)
     r.set("a", DNode.newString(1, r, "xAy"))

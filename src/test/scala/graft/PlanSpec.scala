@@ -21,6 +21,16 @@ class PlanSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
+  test("engine queries run the ShadowExtract plan node, not a typed mapPartitions") {
+    // the oracle checks these queries, so they must run the production path
+    for (q <- Seq("s1_full_rewrite", "s9_spans_to_rows", "pipe3_extract_quality_dedup",
+        "pipe4_extract_outlinks")) {
+      val p = plan(q)
+      assert(p.contains("ShadowExtract"), s"$q: ${p.take(2000)}")
+      assert(!p.contains("MapPartitions"), s"$q: ${p.take(2000)}")
+    }
+  }
+
   test("q2: the nation dim is broadcast, not shuffled") {
     val p = plan("q2_join_broadcast")
     assert(p.contains("BroadcastHashJoin"), p.take(2000))

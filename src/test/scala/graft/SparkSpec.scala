@@ -77,14 +77,22 @@ class SparkSpec extends AnyFunSuite {
     val df = spark.read.parquet(dir)
     val typed = ShadowSpark.process(
       df.as[Doc], program).collect().sortBy(_.doc_id).toSeq
-    val raw = ShadowSpark.processColumnarRaw(df, program)
+    val raw = ShadowSpark.processColumnar(df, program).toDF()
       .as[DocOut].collect().sortBy(_.doc_id).toSeq
     assert(raw == typed)
     // and the raw rows survive a real columnar write+read round-trip
     val outDir = tmpDir("graft_raw_out").toString
-    ShadowSpark.processColumnarRaw(df, program).write.mode("overwrite").parquet(outDir)
+    ShadowSpark.processColumnar(df, program).toDF().write.mode("overwrite").parquet(outDir)
     val reread = spark.read.parquet(outDir).as[DocOut].collect().sortBy(_.doc_id).toSeq
     assert(reread == typed)
+  }
+
+  test("processColumnar output prunes to a column and self-joins") {
+    val out = ShadowSpark.processColumnar(Corpus.generate(spark, 60, 3).toDF(), program).toDF()
+    assert(out.select("doc_id").count() == 60)
+    val joined = out.as("a").join(out.as("b"), "doc_id")
+      .where(col("a.data_json") === col("b.data_json"))
+    assert(joined.count() == 60)
   }
 
   test("parallelism invariance: local partitioning does not change results") {
@@ -341,6 +349,66 @@ class SparkSpec extends AnyFunSuite {
       """SELECT shadow_extract(array(named_struct('kind','html','text','<p>x</p>','media_ref','','offset',0)),
         |'{"s":"p[","hide":true}').errors AS e""".stripMargin).head().getSeq[String](0)
     assert(bad.exists(_.startsWith("Selector p[ is invalid")))
+  }
+
+  test("processColumnar and shadow_extract assemble spans in offset order") {
+    import graft.core.{Doc, Span}
+    import graft.engine.ShadowEngine
+    val p = RuleCompiler.compile(Seq(RuleParser.parseStr(
+      """{"s":"p","data":{"path":"d","values":{"t":{"source":"Contents"}}}}""", new ArrayBuffer[String])))
+    val docs = Seq(
+      Doc("shuffled", Seq(Span("html", "b</p>", "", 1), Span("html", "<p>a", "", 0))),
+      Doc("ties", Seq(Span("html", "<p>x", "", 2), Span("media", "m", "m://1", 1),
+        Span("html", "y", "", 2), Span("html", "</p>", "", 3))))
+    val expected = docs.map(new ShadowEngine(p).process)
+    assert(expected.head.spans.map(_.text).mkString == "<p>ab</p>")
+    assert(expected.head.data_json == """{"d":{"t":"ab"}}""")
+    val dir = tmpDir("graft_order").toString
+    spark.createDataset(docs).write.mode("overwrite").parquet(dir)
+    for (df <- Seq(spark.createDataset(docs).toDF(), spark.read.parquet(dir))) {
+      assert(ShadowSpark.processColumnar(df, p).collect().sortBy(_.doc_id).toSeq == expected)
+    }
+    graft.spark.SqlFunctions.register(spark)
+    val html = spark.read.parquet(dir).orderBy("doc_id")
+      .select(expr("""shadow_extract(spans, '{"s":"p","data":{"path":"d","values":{"t":{"source":"Contents"}}}}')"""))
+      .collect().map(_.getStruct(0).getString(0)).toSeq
+    assert(html == expected.sortBy(_.doc_id).map(_.spans.filter(_.kind != "media").map(_.text).mkString))
+  }
+
+  test("shadow_extract: a row with null span fields yields a row, next to a normal row") {
+    import graft.core.{Doc, Span}
+    graft.spark.SqlFunctions.register(spark)
+    val rule = """{"s":"p","data":{"path":"d","values":{"t":{"source":"Contents"}}}}"""
+    spark.createDataset(Seq(
+      Doc("ok", Seq(Span("html", "<p>x</p>", "", 0))),
+      Doc("nulls", Seq(Span("html", null, "", 0), Span(null, "<i>", "", 1),
+        Span("media", null, null, 2), Span("html", "<p>y</p>", "", 3)))))
+      .createOrReplaceTempView("graft_null_spans")
+    val rows = spark.sql(
+      s"SELECT doc_id, shadow_extract(spans, '$rule') AS r FROM graft_null_spans ORDER BY doc_id")
+      .select("doc_id", "r.html", "r.data_json").collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(rows.toSeq == Seq(
+      ("nulls", "<p>y</p>", """{"d":{"t":"y"}}"""),
+      ("ok", "<p>x</p>", """{"d":{"t":"x"}}""")))
+    // processColumnar applies the same null policy as the driver-side
+    // engine, and a null doc_id or spans array still yields a row
+    val nullDocs = Seq(
+      Doc("nulls", Seq(Span("html", null, "", 0), null, Span(null, "<i>", "", 1),
+        Span("media", null, null, 2), Span("html", "<p>y</p>", "", 3))),
+      Doc(null, Seq(Span("html", "<p>z</p>", "", 0))),
+      Doc("no_spans", null))
+    val p = RuleCompiler.compile(Seq(RuleParser.parseStr(rule, new ArrayBuffer[String])))
+    val out = ShadowSpark.processColumnar(spark.createDataset(nullDocs).toDF(), p).collect()
+    assert(out.length == 3)
+    assert(out.find(_.doc_id == "nulls").get == new graft.engine.ShadowEngine(p).process(nullDocs.head))
+    assert(out.exists(o => o.doc_id == null && o.data_json == """{"d":{"t":"z"}}"""))
+    assert(out.exists(o => o.doc_id == "no_spans"))
+    // a literal argument with a null field is folded, not failed
+    val lit = spark.sql(
+      s"""SELECT shadow_extract(array(named_struct('kind','html','text',CAST(NULL AS STRING),'media_ref','','offset',0),
+         |  named_struct('kind','html','text','<p>z</p>','media_ref','','offset',1)), '$rule') AS r""".stripMargin)
+      .select("r.html", "r.data_json").head()
+    assert(lit.getString(0) == "<p>z</p>" && lit.getString(1) == """{"d":{"t":"z"}}""")
   }
 
   test("tx1: language-ID heuristic on real-language samples") {
